@@ -1500,6 +1500,73 @@ def geometry_to_features(g: GeometryColumn) -> list[tuple[int, list[list[np.ndar
     return out
 
 
+class GeometryBuilder:
+    """Inverse of ``geometry_to_features``: features in, ``GeometryColumn``
+    out. It owns the topology-stream layout rule, so encoders never place
+    counts themselves.
+
+    Counts are recorded in feature order — rings per polygon, and the
+    vertex counts of lines and rings in one sequence — and placed into
+    num_parts / num_rings only by ``finish``, once it is known whether the
+    column holds a polygon (no look-ahead needed)."""
+
+    def __init__(self) -> None:
+        self.types: list[int] = []
+        self._num_geometries: list[int] = []
+        self._ring_counts: list[int] = []  # rings per polygon
+        self._vertex_counts: list[int] = []  # vertices per line / ring
+        self._vertices: list[np.ndarray] = []  # (n, 2) integer chunks
+
+    def add(self, t: int, parts: list[list[np.ndarray]]) -> None:
+        """Append one feature in ``geometry_to_features`` form: MLT type
+        ordinal + parts[rings[(n, 2) integer vertices]], polygon rings
+        WITHOUT their closing vertex. A MULTIPOINT may also pass all of its
+        points as one part, ``[[(n, 2) array]]``."""
+        self.types.append(t)
+        if t == MLT_MULTIPOINT:
+            self._num_geometries.append(sum(r.shape[0] for rings in parts for r in rings))
+        elif t in (MLT_MULTILINESTRING, MLT_MULTIPOLYGON):
+            self._num_geometries.append(len(parts))
+        polygon = t in (MLT_POLYGON, MLT_MULTIPOLYGON)
+        counted = polygon or t in (MLT_LINESTRING, MLT_MULTILINESTRING)
+        for rings in parts:
+            if polygon:
+                self._ring_counts.append(len(rings))
+            for r in rings:
+                if counted:
+                    self._vertex_counts.append(r.shape[0])
+                self._vertices.append(r)
+
+    def extend(self, g: GeometryColumn) -> None:
+        """Append every feature of an already-built column."""
+        self.types.extend(g.types.tolist())
+        self._num_geometries.extend(g.num_geometries.tolist())
+        if np.isin(g.types, (MLT_POLYGON, MLT_MULTIPOLYGON)).any():
+            self._ring_counts.extend(g.num_parts.tolist())
+            self._vertex_counts.extend(g.num_rings.tolist())
+        else:
+            self._vertex_counts.extend(g.num_parts.tolist())
+        self._vertices.append(g.vertices.reshape(-1, 2))
+
+    def finish(self) -> GeometryColumn:
+        """Line vertex counts go to num_rings when the column contains a
+        polygon, else to num_parts (GeometryDecoder's walk, mirrored by
+        ``geometry_to_features``)."""
+        types = np.array(self.types, dtype=np.int64)
+        counts = np.array(self._vertex_counts, dtype=np.int64)
+        if np.isin(types, (MLT_POLYGON, MLT_MULTIPOLYGON)).any():
+            num_parts, num_rings = np.array(self._ring_counts, dtype=np.int64), counts
+        else:
+            num_parts, num_rings = counts, np.empty(0, np.int64)
+        return GeometryColumn(
+            types=types,
+            num_geometries=np.array(self._num_geometries, dtype=np.int64),
+            num_parts=num_parts,
+            num_rings=num_rings,
+            vertices=np.concatenate(self._vertices).reshape(-1) if self._vertices else np.empty(0, np.int64),
+        )
+
+
 # ---------------------------------------------------------------------------
 # stream introspection (MLTStreamObserver analog,
 # java/.../converter/MLTStreamObserver.java / MLTStreamObserverFile.java:1-74:

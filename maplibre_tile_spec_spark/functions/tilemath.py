@@ -42,10 +42,6 @@ def lat_to_tile_y(lat: Column, z: int) -> Column:
     return F.greatest(F.lit(0), F.least(y, F.lit(2**z - 1))).cast("int")
 
 
-def tile_xy(lon: Column, lat: Column, z: int) -> tuple[Column, Column]:
-    return lon_to_tile_x(lon, z), lat_to_tile_y(lat, z)
-
-
 def tile_to_lon(x: Column, z: int) -> Column:
     """West edge of tile column x (projection.hpp:17-30 inverse)."""
     return x.cast("double") / F.lit(float(2**z)) * F.lit(360.0) - F.lit(180.0)
@@ -160,13 +156,22 @@ def np_tile_xy(lon: np.ndarray, lat: np.ndarray, z: int) -> tuple[np.ndarray, np
     return np.clip(x, 0, 2**z - 1), np.clip(y, 0, 2**z - 1)
 
 
-def np_quantize_to_extent(
-    lon: np.ndarray, lat: np.ndarray, x: np.ndarray, y: np.ndarray, z: int, extent: int = 4096
+def np_tile_local(
+    lon: np.ndarray, lat: np.ndarray, x: np.ndarray | int, y: np.ndarray | int, z: int, extent: int = 4096
 ) -> tuple[np.ndarray, np.ndarray]:
+    """Unclamped float tile-extent coords of tile (x, y): outside
+    [0, extent) for points beyond the tile (the clipped tiler's buffer)."""
     n = float(2**z)
     fx = (lon + 180.0) / 360.0 * n
     rad = np.radians(lat)
     fy = (1.0 - np.log(np.tan(rad) + 1.0 / np.cos(rad)) / math.pi) / 2.0 * n
-    qx = np.floor((fx - x) * extent).astype(np.int64)
-    qy = np.floor((fy - y) * extent).astype(np.int64)
+    return (fx - x) * extent, (fy - y) * extent
+
+
+def np_quantize_to_extent(
+    lon: np.ndarray, lat: np.ndarray, x: np.ndarray, y: np.ndarray, z: int, extent: int = 4096
+) -> tuple[np.ndarray, np.ndarray]:
+    fx, fy = np_tile_local(lon, lat, x, y, z, extent)
+    qx = np.floor(fx).astype(np.int64)
+    qy = np.floor(fy).astype(np.int64)
     return np.clip(qx, 0, extent - 1), np.clip(qy, 0, extent - 1)

@@ -1,5 +1,11 @@
 """Distributed MVT→MLT-style tiling: documents → MLT tiles.
 
+One tile-encode pipeline (``_encode_pipeline``) with two assignment policies:
+``encode_tiles`` puts each feature in the tile of its rep point,
+``encode_tiles_clipped`` explodes each feature into every tile its bbox
+touches and clips it there. Each policy supplies only its tile assignment
+and a module-level group kernel; the pipeline owns the rest.
+
 The reference encodes one tile per process iteration
 (java/mlt-cli/.../Encode.java:538-560); here the same per-tile computation is
 an Arrow-batched per-partition kernel (explicit repartition on the group
@@ -15,6 +21,9 @@ concatenations of independently-decodable framed blocks
 single giant applyInPandas group, so the salt is load-bearing at scale
 (SURVEY.md §7.3).
 
+Geometry topology is built only through ``mlt_codec.GeometryBuilder``,
+which owns the num_parts / num_rings layout rule.
+
 Feature ids follow the reference's sort-and-regenerate strategy
 (MltConverter.java:548-611): features sorted by Hilbert index of their first
 vertex, ids reassigned 0..n-1 in final order.
@@ -22,19 +31,23 @@ vertex, ids reassigned 0..n-1 in final order.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from dataclasses import replace
+from functools import partial
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from maplibre_tile_spec_spark.functions import clip as CL
 from maplibre_tile_spec_spark.functions import kernels as K
 from maplibre_tile_spec_spark.functions import mlt_codec as C
 from maplibre_tile_spec_spark.functions import tilemath as TM
 from maplibre_tile_spec_spark.functions import wkt as W
 
 TILE_SCHEMA = "x int, y int, n_features long, n_vertices long, part binary"
+LAYER_NAME = "features"  # layer of every block unless encode_tiles gets a layer_col
 
 
 def _features_to_geometry_column(
@@ -64,61 +77,27 @@ def _features_to_geometry_column(
     )
     # sort by hilbert index of the quantized first vertex (reference sort)
     order = np.argsort(K.hilbert_encode(aqx[starts], aqy[starts], order=12), kind="stable")
+    aq = np.column_stack([aqx, aqy])
 
-    types, num_geoms, num_parts, num_rings = [], [], [], []
-    vert_chunks: list[np.ndarray] = []
-    contains_poly = any(p[0] in (W.GT_POLYGON, W.GT_MULTIPOLYGON) for p in parsed)
+    b = C.GeometryBuilder()
     for i in order:
-        gt, coords, structure = parsed[i]
-        base = starts[i]
-        cqx = aqx[base : base + counts[i]]
-        cqy = aqy[base : base + counts[i]]
-        types.append(gt - 1)  # WKT codes 1-6 → MLT ordinals 0-5
-        ci = 0
-
-        def push(n: int, drop_close: bool) -> None:
-            nonlocal ci
-            take = n - 1 if (drop_close and n > 1) else n
-            chunk = np.empty(take * 2, dtype=np.int64)
-            chunk[0::2] = cqx[ci : ci + take]
-            chunk[1::2] = cqy[ci : ci + take]
-            vert_chunks.append(chunk)
-            ci += n
-
-        if gt == W.GT_POINT:
-            push(1, False)
-        elif gt == W.GT_MULTIPOINT:
-            num_geoms.append(coords.shape[0])
-            push(coords.shape[0], False)
-        elif gt == W.GT_LINESTRING:
-            n = structure[0][0]
-            (num_rings if contains_poly else num_parts).append(n)
-            push(n, False)
-        elif gt == W.GT_MULTILINESTRING:
-            num_geoms.append(len(structure))
-            for part in structure:
-                (num_rings if contains_poly else num_parts).append(part[0])
-                push(part[0], False)
-        elif gt == W.GT_POLYGON:
-            num_parts.append(len(structure[0]))
-            for n in structure[0]:
-                num_rings.append(n - 1)  # closing vertex dropped (GeometryEncoder.java:887-890)
-                push(n, True)
-        else:  # MULTIPOLYGON
-            num_geoms.append(len(structure))
-            for part in structure:
-                num_parts.append(len(part))
-                for n in part:
-                    num_rings.append(n - 1)
-                    push(n, True)
-    g = C.GeometryColumn(
-        types=np.array(types, dtype=np.int64),
-        num_geometries=np.array(num_geoms, dtype=np.int64),
-        num_parts=np.array(num_parts, dtype=np.int64),
-        num_rings=np.array(num_rings, dtype=np.int64),
-        vertices=np.concatenate(vert_chunks) if vert_chunks else np.empty(0, np.int64),
-    )
-    return g, order
+        gt, _coords, structure = parsed[i]
+        t = gt - 1  # WKT codes 1-6 → MLT ordinals 0-5
+        ci = int(starts[i])
+        if t in (C.MLT_POINT, C.MLT_MULTIPOINT):
+            b.add(t, [[aq[ci : ci + counts[i]]]])
+            continue
+        polygon = t in (C.MLT_POLYGON, C.MLT_MULTIPOLYGON)
+        parts = []
+        for part in structure:
+            rings = []
+            for n in part:
+                # closing vertex dropped (GeometryEncoder.java:887-890)
+                rings.append(aq[ci : ci + (n - 1 if polygon and n > 1 else n)])
+                ci += n
+            parts.append(rings)
+        b.add(t, parts)
+    return b.finish(), order
 
 
 def _points_to_geometry_column(
@@ -151,8 +130,6 @@ def _points_to_geometry_column(
     )
     return g, order
 
-
-GEOM_LAYERS = {1: "poi", 2: "road", 3: "land", 4: "poi", 5: "road", 6: "land"}
 
 # auto-salt: target features per encode group. A group at this size encodes
 # in ~O(100 ms); tiles above it fan out into ceil(cnt/target) parts (capped)
@@ -192,7 +169,7 @@ def _iter_sorted_groups(
     batches: Iterator[pd.DataFrame], keys: tuple[str, ...] = ("x", "y", "salt")
 ) -> Iterator[tuple[tuple[int, ...], pd.DataFrame]]:
     """Stream (key, group) pairs from Arrow batches that arrive **sorted by
-    ``keys``** (``sortWithinPartitions`` upstream). A group straddling a
+    ``keys``** (sorted within each partition upstream). A group straddling a
     batch boundary is stitched from its pending chunks; peak memory is one
     group + one Arrow batch, not the whole partition — the JVM-side sort is
     an ExternalSorter (spills), so the Python worker never has to hold a
@@ -223,36 +200,26 @@ def _iter_sorted_groups(
         yield pend_key, flush()
 
 
-_ENCODE_FLUSH_ROWS = 256  # bound output-side buffering in the encode kernels
+_ENCODE_FLUSH_ROWS = 256  # bound output-side buffering in the encode kernel
 
 
-def encode_tiles(
-    features: DataFrame,
+def _encode_pipeline(
+    tiled: DataFrame,
     zoom: int,
-    extent: int = 4096,
-    layer_name: str = "features",
-    layer_col: str | None = None,
-    n_salt: int | str = "auto",
-    salt_target: int = DEFAULT_SALT_TARGET,
-    include_doc_refs: bool = False,
+    n_salt: int | str,
+    salt_target: int,
+    group_order: tuple[str, ...],
+    encode_group: Callable[[int, int, pd.DataFrame], tuple | None],
 ) -> DataFrame:
-    """features (doc_id, span_offset, wkt, rep_lon, rep_lat[, layer]) → one
-    row per tile: (z, x, y, n_features, n_vertices, byte_size, tile binary).
+    """The tile-encode pipeline shared by both tilers: salt → sorted
+    exchange → streamed group kernel → pinned merge.
 
-    With ``layer_col`` the kernel encodes one FeatureTable block per
-    thematic layer inside each tile (the reference's per-layer loop,
-    MltConverter.java:408-509); layer blocks concatenate like salted parts.
-    ``n_salt="auto"`` (default) fans hot tiles out by their own feature
-    count — see ``_with_salt``.
-    """
-
-    cols = ["doc_id", "span_offset", "wkt"]
-    tiled = features.select(
-        *cols,
-        (F.col(layer_col) if layer_col else F.lit(layer_name)).alias("_layer"),
-        TM.lon_to_tile_x(F.col("rep_lon"), zoom).alias("x"),
-        TM.lat_to_tile_y(F.col("rep_lat"), zoom).alias("y"),
-    )
+    ``tiled`` has one row per (feature, tile) assignment, with the tile's
+    ``x``, ``y`` and the ``doc_id``/``span_offset`` the salt hashes.
+    ``encode_group(x, y, pdf)`` gets one (x, y, salt) group, rows sorted by
+    ``group_order``, and returns a TILE_SCHEMA row, or None when no feature
+    survives. Output: one row per tile, (z, x, y, n_features, n_vertices,
+    byte_size, tile)."""
     tiled = _with_salt(tiled, n_salt, salt_target)
     # fine-grained explicit partitioning for the encode exchange: tile sizes
     # are Zipf-ish, so hashing groups into only `shuffle.partitions` buckets
@@ -262,51 +229,15 @@ def encode_tiles(
     # groupBy distribution (no extra exchange) and AQE leaves explicit-N
     # repartitions alone, so the skew averages out across many small tasks.
     fan = tiled.sparkSession.sparkContext.defaultParallelism * 4
-    # sortWithinPartitions makes each (x, y, salt) group contiguous so the
+    # the in-partition sort makes each (x, y, salt) group contiguous so the
     # kernel can stream one group at a time (memory = group, not partition).
-    # The full in-group order (_layer, doc_id, span_offset) is part of the
-    # SAME JVM-side spill-aware sort — a per-group pandas sort_values was
-    # 2.1 s of the 5.6 s single-core kernel at sf0.1 (categorical/lexsort
-    # overhead per group), vs ~free as extra sort keys in the ExternalSorter
+    # The full in-group order is part of the SAME JVM-side spill-aware sort
+    # — a per-group pandas sort_values was 2.1 s of the 5.6 s single-core
+    # kernel at sf0.1 (categorical/lexsort overhead per group), vs ~free as
+    # extra sort keys in the ExternalSorter
     tiled = tiled.repartition(fan, "x", "y", "salt").sortWithinPartitions(
-        "x", "y", "salt", "_layer", "doc_id", "span_offset"
+        "x", "y", "salt", *group_order
     )
-
-    def encode_group(x: int, y: int, pdf: pd.DataFrame) -> tuple:
-        # rows arrive sorted by (_layer, doc_id, span_offset) — layer blocks
-        # are contiguous slices; numpy boundary detection replaces a pandas
-        # groupby (factorize/categorical machinery was ~0.6 s per sf0.1
-        # corpus). JVM binary UTF-8 string order == Python str order for
-        # the sort keys' comparison semantics here: block order must only
-        # be deterministic and consistent with the salted-part merge, which
-        # uses the same upstream sort.
-        lname_arr = pdf["_layer"].to_numpy()
-        bounds = np.concatenate(
-            ([0], np.flatnonzero(lname_arr[1:] != lname_arr[:-1]) + 1, [len(pdf)])
-        )
-        part = b""
-        n_vertices = 0
-        for s, e in zip(bounds[:-1], bounds[1:]):
-            grp = pdf.iloc[s:e]
-            g, order = _features_to_geometry_column(grp["wkt"].tolist(), x, y, zoom, extent)
-            props = []
-            if include_doc_refs:
-                docs = grp["doc_id"].to_numpy()[order].tolist()
-                offs = [int(v) for v in grp["span_offset"].to_numpy()[order]]
-                props = [
-                    C.PropColumn("doc", "string", docs, nullable=True),
-                    C.PropColumn("span", "int32", offs, nullable=False),
-                ]
-            layer = C.LayerData(
-                name=str(lname_arr[s]),
-                extent=extent,
-                geometry=g,
-                ids=np.arange(len(grp), dtype=np.int64),
-                props=props,
-            )
-            part += C.encode_layer(layer)
-            n_vertices += g.vertices.shape[0] // 2
-        return (x, y, len(pdf), n_vertices, part)
 
     def encode_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # whole-partition kernel, streamed group-at-a-time: Spark's
@@ -317,7 +248,9 @@ def encode_tiles(
         cols = ["x", "y", "n_features", "n_vertices", "part"]
         rows = []
         for (x, y, _salt), grp in _iter_sorted_groups(batches):
-            rows.append(encode_group(x, y, grp))
+            row = encode_group(x, y, grp)
+            if row is not None:
+                rows.append(row)
             if len(rows) >= _ENCODE_FLUSH_ROWS:
                 yield pd.DataFrame(rows, columns=cols)
                 rows = []
@@ -333,196 +266,6 @@ def encode_tiles(
     # the whole tile table through a single Arrow task (measured: 1 task /
     # 1024 tiles; transcode 3.6 s → 2.5 s with the pin). Parallelism-derived,
     # not a constant, so it stays scale-adaptive.
-    merge_fan = tiled.sparkSession.sparkContext.defaultParallelism
-    merged = (
-        parts.repartition(merge_fan, "x", "y")
-        .groupBy("x", "y")
-        .agg(
-            F.sum("n_features").alias("n_features"),
-            F.sum("n_vertices").alias("n_vertices"),
-            F.aggregate(
-                F.array_sort(F.collect_list(F.col("part"))),
-                F.lit(b""),
-                lambda acc, p: F.concat(acc, p),
-            ).alias("tile"),
-        )
-        .select(
-            F.lit(zoom).alias("z"),
-            "x",
-            "y",
-            "n_features",
-            "n_vertices",
-            F.length("tile").cast("long").alias("byte_size"),
-            "tile",
-        )
-    )
-    return merged
-
-
-def encode_tiles_clipped(
-    features: DataFrame,
-    zoom: int,
-    extent: int = 4096,
-    buffer: int = 64,
-    layer_name: str = "features",
-    n_salt: int | str = "auto",
-    salt_target: int = DEFAULT_SALT_TARGET,
-) -> DataFrame:
-    """Spanning-feature tiler: every feature lands in every tile its bbox
-    touches (declarative sequence-explode — no Python) and is geometrically
-    clipped to that tile's buffered window inside the encode kernel
-    (Sutherland–Hodgman / Liang–Barsky, functions/clip.py). The MVT-style
-    ``buffer`` (extent units) lets renderers stitch seams."""
-    from maplibre_tile_spec_spark.functions import clip as CL
-
-    x_lo = TM.lon_to_tile_x(F.col("lon_min"), zoom)
-    x_hi = TM.lon_to_tile_x(F.col("lon_max"), zoom)
-    y_lo = TM.lat_to_tile_y(F.col("lat_max"), zoom)  # y grows southward
-    y_hi = TM.lat_to_tile_y(F.col("lat_min"), zoom)
-    tiled = (
-        features.select(
-            "doc_id",
-            "span_offset",
-            "wkt",
-            F.explode(F.sequence(x_lo, x_hi)).alias("x"),
-            y_lo.alias("_y0"),
-            y_hi.alias("_y1"),
-        )
-        .select(
-            "doc_id",
-            "span_offset",
-            "wkt",
-            "x",
-            F.explode(F.sequence(F.col("_y0"), F.col("_y1"))).alias("y"),
-        )
-    )
-    tiled = _with_salt(tiled, n_salt, salt_target)
-    # fine-grained sorted exchange, same reasoning as encode_tiles — the
-    # in-group (doc_id, span_offset) order rides the same JVM sort
-    fan = tiled.sparkSession.sparkContext.defaultParallelism * 4
-    tiled = tiled.repartition(fan, "x", "y", "salt").sortWithinPartitions(
-        "x", "y", "salt", "doc_id", "span_offset"
-    )
-
-    lo, hi = float(-buffer), float(extent + buffer)
-
-    def encode_group(x, y, pdf):
-        types, num_geoms, num_parts, num_rings = [], [], [], []
-        vert_chunks: list[np.ndarray] = []
-        n_feat = 0
-        parsed = [W.parse_wkt(w) for w in pdf["wkt"]]
-        contains_poly = any(p[0] in (W.GT_POLYGON, W.GT_MULTIPOLYGON) for p in parsed)
-
-        nz = float(2**zoom)
-
-        def quantize(coords: np.ndarray) -> np.ndarray:
-            """Unclamped tile-local extent coords (may fall outside [0,extent))."""
-            fx = (coords[:, 0] + 180.0) / 360.0 * nz
-            rad = np.radians(coords[:, 1])
-            fy = (1.0 - np.log(np.tan(rad) + 1.0 / np.cos(rad)) / np.pi) / 2.0 * nz
-            return np.column_stack([(fx - x) * extent, (fy - y) * extent])
-
-        def push(pts: np.ndarray) -> None:
-            chunk = np.empty(pts.shape[0] * 2, dtype=np.int64)
-            chunk[0::2] = np.floor(pts[:, 0]).astype(np.int64)
-            chunk[1::2] = np.floor(pts[:, 1]).astype(np.int64)
-            vert_chunks.append(chunk)
-
-        for gt, coords, structure in parsed:
-            q = quantize(coords)
-            if gt in (W.GT_POINT, W.GT_MULTIPOINT):
-                keep = q[(q[:, 0] >= lo) & (q[:, 0] <= hi) & (q[:, 1] >= lo) & (q[:, 1] <= hi)]
-                if keep.shape[0] == 0:
-                    continue
-                if keep.shape[0] == 1:
-                    types.append(C.MLT_POINT)
-                else:
-                    types.append(C.MLT_MULTIPOINT)
-                    num_geoms.append(keep.shape[0])
-                push(keep)
-                n_feat += 1
-            elif gt in (W.GT_LINESTRING, W.GT_MULTILINESTRING):
-                ci = 0
-                parts_out: list[np.ndarray] = []
-                for part in structure:
-                    n = part[0]
-                    parts_out.extend(CL.clip_line(q[ci : ci + n], lo, lo, hi, hi))
-                    ci += n
-                parts_out = [p for p in parts_out if p.shape[0] >= 2]
-                if not parts_out:
-                    continue
-                if len(parts_out) == 1:
-                    types.append(C.MLT_LINESTRING)
-                    (num_rings if contains_poly else num_parts).append(parts_out[0].shape[0])
-                    push(parts_out[0])
-                else:
-                    types.append(C.MLT_MULTILINESTRING)
-                    num_geoms.append(len(parts_out))
-                    for p in parts_out:
-                        (num_rings if contains_poly else num_parts).append(p.shape[0])
-                        push(p)
-                n_feat += 1
-            else:  # polygon / multipolygon
-                ci = 0
-                polys_out: list[list[np.ndarray]] = []
-                for part in structure:
-                    rings_out = []
-                    for j, n in enumerate(part):
-                        ring = q[ci : ci + n - 1] if n > 1 else q[ci : ci + n]  # drop closing
-                        ci += n
-                        clipped = CL.clip_ring(ring, lo, lo, hi, hi)
-                        if clipped.shape[0] >= 3:
-                            rings_out.append(clipped)
-                        elif j == 0:
-                            rings_out = []
-                            break  # outer ring gone ⇒ whole part gone
-                    if rings_out:
-                        polys_out.append(rings_out)
-                if not polys_out:
-                    continue
-                if len(polys_out) == 1:
-                    types.append(C.MLT_POLYGON)
-                else:
-                    types.append(C.MLT_MULTIPOLYGON)
-                    num_geoms.append(len(polys_out))
-                for rings in polys_out:
-                    num_parts.append(len(rings))
-                    for r in rings:
-                        num_rings.append(r.shape[0])
-                        push(r)
-                n_feat += 1
-        if n_feat == 0:
-            return None
-        g = C.GeometryColumn(
-            types=np.array(types, dtype=np.int64),
-            num_geometries=np.array(num_geoms, dtype=np.int64),
-            num_parts=np.array(num_parts, dtype=np.int64),
-            num_rings=np.array(num_rings, dtype=np.int64),
-            vertices=np.concatenate(vert_chunks),
-        )
-        part = C.encode_layer(
-            C.LayerData(name=layer_name, extent=extent, geometry=g, ids=np.arange(n_feat, dtype=np.int64))
-        )
-        return (x, y, n_feat, g.vertices.shape[0] // 2, part)
-
-    def encode_partition(batches):
-        # streamed per-partition grouping (see encode_tiles: per-group
-        # applyInPandas dispatch dominates on small tiles; the sorted
-        # exchange delivers each group contiguously → group-sized memory)
-        cols = ["x", "y", "n_features", "n_vertices", "part"]
-        rows = []
-        for (x, y, _salt), grp in _iter_sorted_groups(batches):
-            r = encode_group(x, y, grp)
-            if r is not None:
-                rows.append(r)
-            if len(rows) >= _ENCODE_FLUSH_ROWS:
-                yield pd.DataFrame(rows, columns=cols)
-                rows = []
-        if rows:
-            yield pd.DataFrame(rows, columns=cols)
-
-    parts = tiled.mapInPandas(encode_partition, schema=TILE_SCHEMA)
-    # pinned merge exchange — see encode_tiles (decode-kernel parallelism)
     merge_fan = tiled.sparkSession.sparkContext.defaultParallelism
     return (
         parts.repartition(merge_fan, "x", "y")
@@ -548,57 +291,198 @@ def encode_tiles_clipped(
     )
 
 
+def _encode_rep_group(
+    x: int, y: int, pdf: pd.DataFrame, zoom: int, extent: int, include_doc_refs: bool
+) -> tuple:
+    """``encode_tiles`` group kernel: one FeatureTable block per layer."""
+    # rows arrive sorted by (_layer, doc_id, span_offset) — layer blocks
+    # are contiguous slices; numpy boundary detection replaces a pandas
+    # groupby (factorize/categorical machinery was ~0.6 s per sf0.1
+    # corpus). JVM binary UTF-8 string order == Python str order for
+    # the sort keys' comparison semantics here: block order must only
+    # be deterministic and consistent with the salted-part merge, which
+    # uses the same upstream sort.
+    lname_arr = pdf["_layer"].to_numpy()
+    bounds = np.concatenate(([0], np.flatnonzero(lname_arr[1:] != lname_arr[:-1]) + 1, [len(pdf)]))
+    part = b""
+    n_vertices = 0
+    for s, e in zip(bounds[:-1], bounds[1:]):
+        grp = pdf.iloc[s:e]
+        g, order = _features_to_geometry_column(grp["wkt"].tolist(), x, y, zoom, extent)
+        props = []
+        if include_doc_refs:
+            docs = grp["doc_id"].to_numpy()[order].tolist()
+            offs = [int(v) for v in grp["span_offset"].to_numpy()[order]]
+            props = [
+                C.PropColumn("doc", "string", docs, nullable=True),
+                C.PropColumn("span", "int32", offs, nullable=False),
+            ]
+        layer = C.LayerData(
+            name=str(lname_arr[s]),
+            extent=extent,
+            geometry=g,
+            ids=np.arange(len(grp), dtype=np.int64),
+            props=props,
+        )
+        part += C.encode_layer(layer)
+        n_vertices += g.vertices.shape[0] // 2
+    return (x, y, len(pdf), n_vertices, part)
+
+
+def encode_tiles(
+    features: DataFrame,
+    zoom: int,
+    extent: int = 4096,
+    layer_col: str | None = None,
+    n_salt: int | str = "auto",
+    salt_target: int = DEFAULT_SALT_TARGET,
+    include_doc_refs: bool = False,
+) -> DataFrame:
+    """features (doc_id, span_offset, wkt, rep_lon, rep_lat[, layer]) → one
+    row per tile: (z, x, y, n_features, n_vertices, byte_size, tile binary).
+
+    With ``layer_col`` the kernel encodes one FeatureTable block per
+    thematic layer inside each tile (the reference's per-layer loop,
+    MltConverter.java:408-509); layer blocks concatenate like salted parts.
+    ``n_salt="auto"`` (default) fans hot tiles out by their own feature
+    count — see ``_with_salt``.
+    """
+    tiled = features.select(
+        "doc_id",
+        "span_offset",
+        "wkt",
+        (F.col(layer_col) if layer_col else F.lit(LAYER_NAME)).alias("_layer"),
+        TM.lon_to_tile_x(F.col("rep_lon"), zoom).alias("x"),
+        TM.lat_to_tile_y(F.col("rep_lat"), zoom).alias("y"),
+    )
+    kernel = partial(_encode_rep_group, zoom=zoom, extent=extent, include_doc_refs=include_doc_refs)
+    return _encode_pipeline(
+        tiled, zoom, n_salt, salt_target, ("_layer", "doc_id", "span_offset"), kernel
+    )
+
+
+def _encode_clipped_group(
+    x: int, y: int, pdf: pd.DataFrame, zoom: int, extent: int, buffer: int
+) -> tuple | None:
+    """``encode_tiles_clipped`` group kernel: clip each feature to tile
+    (x, y)'s window grown by ``buffer``; None when nothing survives."""
+    lo, hi = float(-buffer), float(extent + buffer)
+    b = C.GeometryBuilder()
+
+    def floor(pts: np.ndarray) -> np.ndarray:
+        return np.floor(pts).astype(np.int64)
+
+    for gt, coords, structure in (W.parse_wkt(w) for w in pdf["wkt"]):
+        q = np.column_stack(TM.np_tile_local(coords[:, 0], coords[:, 1], x, y, zoom, extent))
+        if gt in (W.GT_POINT, W.GT_MULTIPOINT):
+            keep = q[(q[:, 0] >= lo) & (q[:, 0] <= hi) & (q[:, 1] >= lo) & (q[:, 1] <= hi)]
+            if keep.shape[0]:
+                b.add(C.MLT_POINT if keep.shape[0] == 1 else C.MLT_MULTIPOINT, [[floor(keep)]])
+        elif gt in (W.GT_LINESTRING, W.GT_MULTILINESTRING):
+            ci = 0
+            lines: list[np.ndarray] = []
+            for (n,) in structure:
+                lines.extend(CL.clip_line(q[ci : ci + n], lo, lo, hi, hi))
+                ci += n
+            parts = [[floor(p)] for p in lines if p.shape[0] >= 2]
+            if parts:
+                b.add(C.MLT_LINESTRING if len(parts) == 1 else C.MLT_MULTILINESTRING, parts)
+        else:  # polygon / multipolygon
+            ci = 0
+            polys: list[list[np.ndarray]] = []
+            for part in structure:
+                rings: list[np.ndarray] = []
+                for j, n in enumerate(part):
+                    ring = q[ci : ci + n - 1] if n > 1 else q[ci : ci + n]  # drop closing
+                    ci += n  # advance past every ring, kept or not
+                    if j and not rings:
+                        continue  # outer ring gone ⇒ whole part gone
+                    clipped = CL.clip_ring(ring, lo, lo, hi, hi)
+                    if clipped.shape[0] >= 3:
+                        rings.append(floor(clipped))
+                if rings:
+                    polys.append(rings)
+            if polys:
+                b.add(C.MLT_POLYGON if len(polys) == 1 else C.MLT_MULTIPOLYGON, polys)
+    if not b.types:
+        return None
+    g = b.finish()
+    n_feat = len(b.types)
+    part = C.encode_layer(C.LayerData(LAYER_NAME, extent, g, ids=np.arange(n_feat, dtype=np.int64)))
+    return (x, y, n_feat, g.vertices.shape[0] // 2, part)
+
+
+def encode_tiles_clipped(
+    features: DataFrame,
+    zoom: int,
+    extent: int = 4096,
+    buffer: int = 64,
+    n_salt: int | str = "auto",
+    salt_target: int = DEFAULT_SALT_TARGET,
+) -> DataFrame:
+    """Spanning-feature tiler: every feature lands in every tile its bbox
+    touches (declarative sequence-explode — no Python) and is geometrically
+    clipped to that tile's buffered window inside the encode kernel
+    (Sutherland–Hodgman / Liang–Barsky, functions/clip.py). The MVT-style
+    ``buffer`` (extent units) lets renderers stitch seams."""
+    x_lo = TM.lon_to_tile_x(F.col("lon_min"), zoom)
+    x_hi = TM.lon_to_tile_x(F.col("lon_max"), zoom)
+    y_lo = TM.lat_to_tile_y(F.col("lat_max"), zoom)  # y grows southward
+    y_hi = TM.lat_to_tile_y(F.col("lat_min"), zoom)
+    tiled = (
+        features.select(
+            "doc_id",
+            "span_offset",
+            "wkt",
+            F.explode(F.sequence(x_lo, x_hi)).alias("x"),
+            y_lo.alias("_y0"),
+            y_hi.alias("_y1"),
+        )
+        .select(
+            "doc_id",
+            "span_offset",
+            "wkt",
+            "x",
+            F.explode(F.sequence(F.col("_y0"), F.col("_y1"))).alias("y"),
+        )
+    )
+    kernel = partial(_encode_clipped_group, zoom=zoom, extent=extent, buffer=buffer)
+    return _encode_pipeline(tiled, zoom, n_salt, salt_target, ("doc_id", "span_offset"), kernel)
+
+
+def _merge_children(parent: tuple, pdf: pd.DataFrame, extent: int) -> pd.DataFrame:
+    """``build_parent_tiles`` group kernel: child tiles (x, y, tile) of
+    parent (z, x, y) → one parent TILE_SCHEMA row with its z."""
+    pz, px, py = (int(k) for k in parent)
+    per_layer: dict[str, C.GeometryBuilder] = {}
+    for cx, cy, blob in zip(pdf["x"], pdf["y"], pdf["tile"]):
+        ox = (int(cx) & 1) * extent // 2
+        oy = (int(cy) & 1) * extent // 2
+        for la in C.decode_tile(bytes(blob)):
+            v = la.geometry.vertices.copy()
+            v[0::2] = v[0::2] // 2 + ox
+            v[1::2] = v[1::2] // 2 + oy
+            per_layer.setdefault(la.name, C.GeometryBuilder()).extend(replace(la.geometry, vertices=v))
+    parts = b""
+    n_feat = 0
+    n_vert = 0
+    for lname in sorted(per_layer):
+        merged = per_layer[lname].finish()
+        n = merged.types.shape[0]
+        parts += C.encode_layer(C.LayerData(lname, extent, merged, ids=np.arange(n, dtype=np.int64)))
+        n_feat += n
+        n_vert += merged.vertices.shape[0] // 2
+    return pd.DataFrame(
+        {"z": [pz], "x": [px], "y": [py], "n_features": [n_feat], "n_vertices": [n_vert], "part": [parts]}
+    )
+
+
 def build_parent_tiles(tiles: DataFrame, extent: int = 4096) -> DataFrame:
     """One pyramid level up: merge each 2×2 block of child tiles into a
     parent tile — decode children, halve + offset coordinates into the
     parent's extent space, re-encode per layer. The tiling analog of a
     hypertable rollup: a single shuffle on the parent key, Arrow kernels do
     the geometry work. Apply iteratively for a full overview pyramid."""
-
-    def merge_group(key, pdf):
-        pz, px, py = int(key[0]), int(key[1]), int(key[2])
-        per_layer: dict[str, list] = {}
-        for cx, cy, blob in zip(pdf["x"], pdf["y"], pdf["tile"]):
-            cx, cy = int(cx), int(cy)
-            ox = (cx & 1) * extent // 2
-            oy = (cy & 1) * extent // 2
-            for la in C.decode_tile(bytes(blob)):
-                g = la.geometry
-                v = g.vertices.copy()
-                v[0::2] = v[0::2] // 2 + ox
-                v[1::2] = v[1::2] // 2 + oy
-                per_layer.setdefault(la.name, []).append(
-                    C.GeometryColumn(g.types, g.num_geometries, g.num_parts, g.num_rings, v)
-                )
-        parts = b""
-        n_feat = 0
-        n_vert = 0
-        for lname in sorted(per_layer):
-            gs = per_layer[lname]
-            merged = C.GeometryColumn(
-                types=np.concatenate([g.types for g in gs]),
-                num_geometries=np.concatenate([g.num_geometries for g in gs]),
-                num_parts=np.concatenate([g.num_parts for g in gs]),
-                num_rings=np.concatenate([g.num_rings for g in gs]),
-                vertices=np.concatenate([g.vertices for g in gs]),
-            )
-            n = merged.types.shape[0]
-            parts += C.encode_layer(
-                C.LayerData(lname, extent, merged, ids=np.arange(n, dtype=np.int64))
-            )
-            n_feat += n
-            n_vert += merged.vertices.shape[0] // 2
-        return pd.DataFrame(
-            {
-                "z": [pz],
-                "x": [px],
-                "y": [py],
-                "n_features": [n_feat],
-                "n_vertices": [n_vert],
-                "part": [parts],
-            }
-        )
-
     parent = tiles.select(
         (F.col("z") - 1).cast("int").alias("pz"),
         F.shiftrightunsigned(F.col("x"), 1).cast("int").alias("px"),
@@ -608,7 +492,9 @@ def build_parent_tiles(tiles: DataFrame, extent: int = 4096) -> DataFrame:
         "tile",
     )
     # the parent zoom comes from the group key — no driver-side action
-    out = parent.groupBy("pz", "px", "py").applyInPandas(merge_group, schema="z int, " + TILE_SCHEMA)
+    out = parent.groupBy("pz", "px", "py").applyInPandas(
+        lambda key, pdf: _merge_children(key, pdf, extent), schema="z int, " + TILE_SCHEMA
+    )
     return out.select(
         "z",
         "x",

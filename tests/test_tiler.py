@@ -1,5 +1,8 @@
 """Distributed tiler: membership round-trip + salt-invariance + span invariant."""
 
+import hashlib
+import struct
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -86,18 +89,47 @@ class TestEncodeTiles:
         assert total_tile_bytes < total_wkt_bytes * 0.5
 
 
+def _themed(features):
+    """The poi/road/land split by geometry class."""
+    return features.withColumn(
+        "layer",
+        F.when(F.col("geom_type").isin(1, 4), "poi")
+        .when(F.col("geom_type").isin(2, 5), "road")
+        .otherwise("land"),
+    )
+
+
+class TestEncodeBytesPin:
+    """Regression pins, NOT reference parity (ROADMAP 4d): SHA-256 over the
+    sorted (x, y, tile) rows of each case, recorded from encode_tiles
+    before both tilers shared one pipeline. A mismatch means the tile bytes
+    changed."""
+
+    DIGESTS = {
+        "z8": "87b6af05c3eeaa7e084f0bf9f3d57b94f18e502da780a13f57745b59852c4fe6",
+        "z5_layer_col": "d8ad0a4ff0403e7fa7c912353fd31bb11e26a772ce3513a54901359f059a7bba",
+        "z4_doc_refs": "483b83081e29430493d108a8d8bbd6a794eba97428e59d30e3ee1e2104f69928",
+    }
+
+    @pytest.mark.parametrize("case", sorted(DIGESTS))
+    def test_encode_tiles_bytes_pinned(self, spark, feats, case):
+        _, features = feats
+        tiles = {
+            "z8": lambda: tiler.encode_tiles(features, zoom=8),
+            "z5_layer_col": lambda: tiler.encode_tiles(_themed(features), zoom=5, layer_col="layer"),
+            "z4_doc_refs": lambda: tiler.encode_tiles(features, zoom=4, include_doc_refs=True),
+        }[case]()
+        h = hashlib.sha256()
+        for x, y, tile in sorted((r.x, r.y, bytes(r.tile)) for r in tiles.select("x", "y", "tile").collect()):
+            h.update(struct.pack("<iiq", x, y, len(tile)))
+            h.update(tile)
+        assert h.hexdigest() == self.DIGESTS[case]
+
+
 class TestMultiLayer:
     def test_thematic_layers(self, spark, feats):
         _, features = feats
-        from pyspark.sql import functions as F
-
-        themed = features.withColumn(
-            "layer",
-            F.when(F.col("geom_type").isin(1, 4), "poi")
-            .when(F.col("geom_type").isin(2, 5), "road")
-            .otherwise("land"),
-        )
-        tiles = tiler.encode_tiles(themed, zoom=5, layer_col="layer").cache()
+        tiles = tiler.encode_tiles(_themed(features), zoom=5, layer_col="layer").cache()
         row = tiles.orderBy(F.desc("n_features")).first()
         layers = C.decode_tile(bytes(row.tile))
         names = sorted({la.name for la in layers})
