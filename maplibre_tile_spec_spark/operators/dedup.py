@@ -316,20 +316,15 @@ def connected_components(
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iter: int = 30,
-    algorithm: str = "jump",
 ) -> DataFrame:
     """Connected components over a candidate-pair edge list → (id, comp)
     where ``comp`` is the minimum vertex id of the component. Pure DataFrame
     joins, no driver-side graph state.
 
-    ``algorithm="jump"`` (default) is min-label propagation + pointer
-    jumping — fastest on realistic near-dup graphs (diameter ≤ ~5).
-    ``algorithm="star"`` is the alternating large-star/small-star algorithm
-    (Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC
-    2014) whose round count is O(log² n) independent of graph STRUCTURE —
-    the safety valve for adversarial diameters where pointer jumping's
-    per-round O(log diameter) constant stacks up (see BENCH.md stress
-    table). Both return the identical (id, comp) labeling.
+    The algorithm is min-label propagation + pointer jumping; it measured
+    faster than alternating large-star/small-star (Kiveris et al., SoCC
+    2014) on both near-dup and adversarial high-diameter graphs (BENCH.md
+    stress table).
 
     Each iteration does (a) a min-label propagation step (every vertex takes
     the min of its own and its neighbors' labels) and (b) a pointer-jumping
@@ -345,10 +340,6 @@ def connected_components(
     Beyond-reference operator (the reference has no graph ops): this is the
     cluster-resolution step that keeps near-dup output linear in cluster
     count where pair output is O(c²) per cluster."""
-    if algorithm == "star":
-        return _connected_components_star(pairs, src, dst, max_iter)
-    if algorithm != "jump":
-        raise ValueError(f"unknown connected-components algorithm {algorithm!r}")
     # one cheap count sizes the iteration partitioning: a 255-edge candidate
     # graph must not pay 32-partition shuffle scheduling per iteration, and a
     # 10^10-edge graph must not funnel into one task. Upstream pair sources
@@ -379,33 +370,37 @@ def connected_components(
             .repartition(parts, "v")
             .persist()
         )
-        labels = (
-            edges.select(F.col("u").alias("id"))
-            .distinct()
-            .select("id", F.col("id").alias("comp"))
-            .localCheckpoint(eager=True)
-        )
-        prev = object()
-        converged = False
-        for _ in range(max_iter):
-            nbr = edges.join(labels, edges["v"] == labels["id"]).select(
-                F.col("u").alias("id"), "comp"
+        try:
+            labels = (
+                edges.select(F.col("u").alias("id"))
+                .distinct()
+                .select("id", F.col("id").alias("comp"))
+                .localCheckpoint(eager=True)
             )
-            merged = nbr.unionByName(labels).groupBy("id").agg(F.min("comp").alias("comp"))
-            parent = merged.select(F.col("id").alias("p_id"), F.col("comp").alias("p_comp"))
-            jumped = merged.join(parent, merged["comp"] == parent["p_id"], "left").select(
-                "id", F.coalesce("p_comp", "comp").alias("comp")
-            )
-            # LAZY checkpoint: the convergence aggregate below is the action
-            # that materializes it, so each iteration costs ONE Spark job
-            # (checkpoint + sum together), not two
-            labels = jumped.localCheckpoint(eager=False)
-            s = labels.agg(F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")).first()["s"]
-            if s == prev:
-                converged = True
-                break
-            prev = s
-        edges.unpersist()
+            prev = object()
+            converged = False
+            for _ in range(max_iter):
+                nbr = edges.join(labels, edges["v"] == labels["id"]).select(
+                    F.col("u").alias("id"), "comp"
+                )
+                merged = nbr.unionByName(labels).groupBy("id").agg(F.min("comp").alias("comp"))
+                parent = merged.select(F.col("id").alias("p_id"), F.col("comp").alias("p_comp"))
+                jumped = merged.join(parent, merged["comp"] == parent["p_id"], "left").select(
+                    "id", F.coalesce("p_comp", "comp").alias("comp")
+                )
+                # LAZY checkpoint: the convergence aggregate below is the action
+                # that materializes it, so each iteration costs ONE Spark job
+                # (checkpoint + sum together), not two
+                labels = jumped.localCheckpoint(eager=False)
+                s = labels.agg(F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")).first()["s"]
+                if s == prev:
+                    converged = True
+                    break
+                prev = s
+        finally:
+            # released even when an iteration fails: the edge list is
+            # input-sized and must not stay pinned
+            edges.unpersist()
     finally:
         if aqe_off:
             spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
@@ -421,84 +416,6 @@ def connected_components(
             "O(log diameter) rounds)"
         )
     return labels
-
-
-def _connected_components_star(
-    pairs: DataFrame, src: str, dst: str, max_iter: int
-) -> DataFrame:
-    """Alternating large-star/small-star connected components (Kiveris et
-    al. 2014). Edges are kept canonical (u > v); one round is
-
-    * **large-star**: per node ``u`` over its full neighborhood, attach
-      every strictly-larger neighbor ``w`` to ``m = min(N(u) ∪ {u})`` —
-      emits ``(w, m)``;
-    * **small-star**: per larger-endpoint ``u`` of the canonical edges,
-      ``m = min(N(u))``; attach ``u`` and every other smaller neighbor to
-      ``m``.
-
-    Both steps only ever re-attach a vertex to something ≤ its current
-    neighbor, and the paper proves the edge set becomes a set of
-    min-rooted stars in O(log² n) rounds regardless of structure — this is
-    the variant to reach for on adversarial-diameter graphs where pointer
-    jumping's per-round join count stacks up. Convergence is detected
-    EXACTLY (count equality + anti-join emptiness vs the previous round's
-    edge set): a one-hop label-sum fixpoint is not sound here because an
-    edge rewire two hops from every vertex's current minimum leaves the
-    label sum unchanged while the star structure is still forming."""
-    e0 = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    verts = (
-        e0.select(F.col("a").alias("id"))
-        .unionByName(e0.select(F.col("b").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    e = (
-        e0.where(F.col("a") != F.col("b"))
-        .select(F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_e = e.count()
-    converged = n_e == 0
-    for _ in range(max_iter):
-        if converged:
-            break
-        # large-star over the symmetric view
-        sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = sym.groupBy("u").agg(F.min("v").alias("mn"))
-        mins = mins.select("u", F.least("u", "mn").alias("m"))
-        large = (
-            sym.join(mins, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # small-star on the canonical (u > v) edges
-        j = large.join(large.groupBy("u").agg(F.min("v").alias("m")), "u")
-        new = (
-            j.where(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionByName(j.select("u", F.col("m").alias("v")))
-            .distinct()
-            .localCheckpoint(eager=False)  # the count below materializes it
-        )
-        n_new = new.count()
-        converged = n_new == n_e and (
-            new.join(e, ["u", "v"], "left_anti").limit(1).count() == 0
-        )
-        e, n_e = new, n_new
-    if not converged:
-        raise RuntimeError(
-            f"connected_components(star) did not converge in max_iter={max_iter} "
-            "rounds; raise max_iter (large-star/small-star converges in "
-            "O(log² n) rounds)"
-        )
-    # fixpoint edge set = min-rooted stars: u → comp directly
-    star = e.select(F.col("u").alias("id"), F.col("v").alias("comp"))
-    return verts.join(star, "id", "left").select(
-        "id", F.coalesce("comp", F.col("id")).alias("comp")
-    )
 
 
 def cluster_assign(

@@ -37,10 +37,10 @@ def extract_geom_spans(docs: DataFrame) -> DataFrame:
     )
 
 
-_TYPE_CODE_MAP = {name: code for name, code in W.TYPE_CODES.items()}
-
-#: numeric WKT token (shared by the batch parser's one-pass extraction)
-_NUM_RE = re.compile(r"-?[0-9]+(?:\.[0-9]+)?(?:[eE][+-]?[0-9]+)?")
+#: numeric WKT token, or the row terminator ``_ROW_END`` that
+#: ``_parse_batch`` appends to every row (``float`` maps it to NaN)
+_TOKEN_RE = re.compile(r"-?[0-9]+(?:\.[0-9]+)?(?:[eE][+-]?[0-9]+)?|nan")
+_ROW_END = "\nnan\n"
 
 #: first "lon lat" pair after the opening paren — the representative point
 #: (identical to ``_parse_batch``'s rep, which is the first vertex for every
@@ -61,7 +61,11 @@ def extract_rep_points(docs: DataFrame) -> DataFrame:
     parser (both are correctly-rounded decimal→binary conversions of the
     same token), verified value-for-value against ``extract_features`` at
     bench scale. Use :func:`extract_features` when bbox or geometry type is
-    needed (e.g. the clipped tiler)."""
+    needed (e.g. the clipped tiler).
+
+    A row with no coordinate pair (``POINT EMPTY``) does not become a NULL
+    rep point: ``regexp_extract`` gives ``''`` and Spark 4's ANSI cast fails
+    the query with ``CAST_INVALID_INPUT``."""
     spans = extract_geom_spans(docs)
     return spans.select(
         "doc_id",
@@ -73,87 +77,62 @@ def extract_rep_points(docs: DataFrame) -> DataFrame:
 
 
 def _parse_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Vectorized WKT summary for a whole Arrow batch.
+    """Vectorized WKT summary (type, first vertex, bbox) for a whole Arrow
+    batch, one path for every geometry class.
 
-    The hot path: geometry type via one vectorized prefix extract; POINT
-    features (the majority class) parsed entirely with pandas str ops; the
-    remaining classes fall back to the generic parser. ~4× faster than
-    per-row parsing on the fixture mix."""
+    Every valid 2D WKT has exactly 2·(commas+1) numeric tokens: each comma
+    separates two vertices, including ring/part separators (a ring boundary
+    "),(" contributes one comma and joins two vertex runs). So per-row
+    comma counts come from ``str.count``, and the tokens from ONE
+    regex pass over the batch with each row terminated by ``_ROW_END``,
+    which the same regex matches and ``float`` maps to NaN: the NaN
+    positions give each row's token count. A row whose count breaks the
+    identity (3D coords, EMPTY, stray token) or that holds the terminator
+    itself raises ``ValueError`` naming it, instead of shifting the
+    coordinates of the rows after it. The x/y values are then the even/odd
+    positions and the per-row rep point and bbox come from ``reduceat``."""
     wkts = pdf["wkt"]
-    prefix = wkts.str.extract(r"^\s*([A-Za-z]+)", expand=False).str.upper()
-    gts = prefix.map(_TYPE_CODE_MAP).astype("int32")
-
     n = len(pdf)
-    rlon = np.empty(n)
-    rlat = np.empty(n)
-    x0 = np.empty(n)
-    y0 = np.empty(n)
-    x1 = np.empty(n)
-    y1 = np.empty(n)
+    prefix = wkts.str.extract(r"^\s*([A-Za-z]+)", expand=False).str.upper()
+    gts = prefix.map(W.TYPE_CODES)
+    if gts.isna().any():
+        i = int(np.flatnonzero(gts.isna().to_numpy())[0])
+        raise ValueError(f"WKT row {i}: unknown geometry type: {wkts.iloc[i]!r:.120}")
 
-    is_point = (gts == W.GT_POINT).to_numpy()
-    if is_point.any():
-        pts = wkts[is_point].str.extract(r"\(\s*(-?[0-9.]+)\s+(-?[0-9.]+)")
-        px = pts[0].astype(float).to_numpy()
-        py = pts[1].astype(float).to_numpy()
-        rlon[is_point] = px
-        rlat[is_point] = py
-        x0[is_point] = px
-        y0[is_point] = py
-        x1[is_point] = px
-        y1[is_point] = py
+    commas = np.fromiter((w.count(",") for w in wkts), dtype=np.int64, count=n)
+    toks = _TOKEN_RE.findall(_ROW_END.join([*wkts, ""]))
+    vals = np.fromiter(map(float, toks), dtype=np.float64, count=len(toks))
+    ends = np.flatnonzero(np.isnan(vals))
+    if ends.shape[0] != n:
+        i = next(i for i, w in enumerate(wkts) if "nan" in _TOKEN_RE.findall(w))
+        raise ValueError(f"WKT row {i}: unexpected token 'nan': {wkts.iloc[i]!r:.120}")
+    counts = np.diff(ends, prepend=-1) - 1
+    expect = 2 * (commas + 1)
+    bad = np.flatnonzero(counts != expect)
+    if bad.shape[0]:
+        i = int(bad[0])
+        raise ValueError(
+            f"WKT row {i}: {counts[i]} numeric tokens, a 2D geometry with "
+            f"{commas[i]} commas has {expect[i]}: {wkts.iloc[i]!r:.120}"
+        )
 
-    rest_idx = np.flatnonzero(~is_point)
-    if rest_idx.shape[0]:
-        # the summary needs only (first vertex, bbox). Fast path: every
-        # valid 2D WKT has exactly 2·(commas+1) numeric tokens (each comma
-        # separates two vertices, including ring/part separators — a ring
-        # boundary "),(" contributes one comma and joins two vertex runs),
-        # so per-row token counts come from a C-level str.count and the
-        # tokens themselves from ONE regex pass over the joined batch —
-        # ~2× the old per-row findall. Any malformed row (3D coords, EMPTY)
-        # breaks the total-count identity and drops the whole remainder to
-        # the per-row path below. Coordinate counts are always even, so x/y
-        # are the global even/odd positions; per-row reduction is reduceat.
-        rest = wkts.iloc[rest_idx]
-        commas = np.fromiter((s.count(",") for s in rest), dtype=np.int64, count=rest_idx.shape[0])
-        counts = 2 * (commas + 1)
-        toks = _NUM_RE.findall("\n".join(rest))
-        if len(toks) == int(counts.sum()):
-            allf = np.fromiter(map(float, toks), dtype=np.float64, count=len(toks))
-            xs = allf[0::2]
-            ys = allf[1::2]
-            voffs = np.concatenate(([0], np.cumsum(counts // 2)[:-1]))
-            rlon[rest_idx] = xs[voffs]
-            rlat[rest_idx] = ys[voffs]
-            x0[rest_idx] = np.minimum.reduceat(xs, voffs)
-            y0[rest_idx] = np.minimum.reduceat(ys, voffs)
-            x1[rest_idx] = np.maximum.reduceat(xs, voffs)
-            y1[rest_idx] = np.maximum.reduceat(ys, voffs)
-        else:
-            # token total disagrees with the comma-count identity (3D
-            # coords, EMPTY geometry, stray token): a misaligned global
-            # even/odd split would corrupt every row after the bad one —
-            # fall back to the structural per-row parser for the whole
-            # remainder, which raises on the offending row instead
-            for i in rest_idx:
-                _gt, coords, _structure = W.parse_wkt(wkts.iloc[i])
-                rlon[i], rlat[i] = coords[0, 0], coords[0, 1]
-                x0[i], y0[i] = coords.min(axis=0)
-                x1[i], y1[i] = coords.max(axis=0)
-
+    xy = np.delete(vals, ends)
+    xs = xy[0::2]
+    ys = xy[1::2]
+    nv = counts // 2
+    voffs = np.cumsum(nv) - nv
     return pd.DataFrame(
         {
             "doc_id": pdf["doc_id"],
             "span_offset": pdf["span_offset"].astype("int32"),
             "wkt": wkts,
-            "geom_type": gts,
-            "rep_lon": rlon,
-            "rep_lat": rlat,
-            "lon_min": x0,
-            "lat_min": y0,
-            "lon_max": x1,
-            "lat_max": y1,
+            "geom_type": gts.astype("int32"),
+            "rep_lon": xs[voffs],
+            "rep_lat": ys[voffs],
+            "lon_min": np.minimum.reduceat(xs, voffs),
+            "lat_min": np.minimum.reduceat(ys, voffs),
+            "lon_max": np.maximum.reduceat(xs, voffs),
+            "lat_max": np.maximum.reduceat(ys, voffs),
         }
     )
 

@@ -1,4 +1,5 @@
 import os
+import re
 import sys
 
 import pytest
@@ -26,3 +27,18 @@ def spark():
 def sf_dir():
     sf = os.environ.get("SPARK_GRAFT_TEST_SF", "sf0.001")
     return os.path.join(TESTDATA, sf)
+
+
+_REFERENCE_SKIP = re.compile(r"reference|fixture", re.IGNORECASE)
+
+
+def pytest_terminal_summary(terminalreporter):
+    """One line saying how many skips were reference-tree/fixture checks,
+    so a run shows how much went unchecked where those inputs are absent."""
+    skipped = terminalreporter.stats.get("skipped", [])
+    reasons = [r.longrepr[2] for r in skipped if isinstance(r.longrepr, tuple)]
+    n_ref = sum(1 for reason in reasons if _REFERENCE_SKIP.search(reason))
+    terminalreporter.write_line(
+        f"{n_ref} of {len(skipped)} skipped tests need the reference tree or "
+        "fixtures (not checked in this run)"
+    )

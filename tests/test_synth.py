@@ -169,23 +169,64 @@ class TestJoinSides:
 
 
 class TestFeatureBatchGuards:
-    def test_odd_token_rows_fall_back_to_structural_parse(self):
+    @staticmethod
+    def _batch(wkts):
+        import pandas as pd
+
+        return pd.DataFrame(
+            {"doc_id": [str(i) for i in range(len(wkts))], "span_offset": [0] * len(wkts), "wkt": wkts}
+        )
+
+    def test_odd_token_row_raises_value_error(self):
         """A 3D/stray-token WKT row must not silently misalign the
         vectorized even/odd coordinate split for rows after it."""
-        import pandas as pd
-        import pytest as _pytest
-
         from maplibre_tile_spec_spark.operators.features import _parse_batch
 
         good = "LINESTRING (1 2, 3 4)"
         bad = "LINESTRING (1 2, 3 4 9)"  # stray token: odd count
-        pdf = pd.DataFrame(
-            {"doc_id": ["a", "b"], "span_offset": [0, 0], "wkt": [bad, good]}
+        with pytest.raises(ValueError, match="row 0"):
+            _parse_batch(self._batch([bad, good]))
+
+    def test_point_with_exponent(self):
+        from maplibre_tile_spec_spark.operators.features import _parse_batch
+
+        out = _parse_batch(self._batch(["POINT (1e-05 2)"]))
+        assert (out.loc[0, "rep_lon"], out.loc[0, "rep_lat"]) == (1e-05, 2.0)
+        assert (out.loc[0, "lon_min"], out.loc[0, "lat_max"]) == (1e-05, 2.0)
+
+    def test_bad_rows_that_balance_the_batch_total_raise(self):
+        """EMPTY (two tokens short) and 3D (two tokens over) cancel out in
+        the batch's token total; the per-row check must still catch them
+        rather than shift the valid middle row's coordinates."""
+        from maplibre_tile_spec_spark.operators.features import _parse_batch
+
+        wkts = ["LINESTRING EMPTY", "LINESTRING (10 20, 30 40)", "LINESTRING Z (0 0 0, 1 1 1)"]
+        with pytest.raises(ValueError, match="row 0"):
+            _parse_batch(self._batch(wkts))
+
+    def test_rep_points_point_empty_fails_loudly(self, spark):
+        """The Catalyst rep-point path must not turn ``POINT EMPTY`` into a
+        NULL rep point: the ANSI cast of the empty extract fails the query."""
+        from pyspark.errors import PySparkException
+
+        from maplibre_tile_spec_spark.operators.features import extract_rep_points
+
+        docs = spark.createDataFrame(
+            [("a", [("geom", "POINT (1 2)", "", 0)]), ("b", [("geom", "POINT EMPTY", "", 0)])],
+            synth.DOCUMENTS_SCHEMA,
         )
-        # the structural parser raises loudly on the 3D row instead of
-        # corrupting the batch (coords no longer reshape to [n,2])
-        with _pytest.raises(Exception):
-            _parse_batch(pdf)
+        with pytest.raises(PySparkException) as exc:
+            extract_rep_points(docs).collect()
+        assert exc.value.getCondition() == "CAST_INVALID_INPUT"
+
+    def test_empty_batch(self):
+        import pandas as pd
+
+        from maplibre_tile_spec_spark.operators.features import FEATURES_SCHEMA, _parse_batch
+
+        out = _parse_batch(pd.DataFrame(columns=["doc_id", "span_offset", "wkt"]))
+        assert len(out) == 0
+        assert list(out.columns) == [c.split()[0] for c in FEATURES_SCHEMA.split(", ")]
 
     def test_even_mixed_batch_unaffected(self):
         import pandas as pd
