@@ -22,7 +22,8 @@ All hot paths are declarative Spark expressions (JVM-side, codegen'd):
   verified exactly on the full shingle sets.
 
 * cluster resolution — connected components over the candidate-pair graph
-  (min-label propagation + pointer jumping, pure DataFrame joins) and a
+  (min-label propagation + pointer jumping; numpy on the driver below
+  250k edges, pure DataFrame joins above) and a
   keep-one ``dedup_keep_canonical`` output: one canonical row per near-dup
   cluster, linear in cluster count where pair output is O(c²) per cluster.
 
@@ -311,6 +312,11 @@ def ngram_jaccard_pairs(
     return _scoped_materialize(out, sets, prefixes)
 
 
+# edges per partition of the distributed CC loop; an edge list smaller than
+# one partition resolves on the driver
+_EDGES_PER_PARTITION = 250_000
+
+
 def connected_components(
     pairs: DataFrame,
     src: str = "doc_a",
@@ -318,8 +324,7 @@ def connected_components(
     max_iter: int = 30,
 ) -> DataFrame:
     """Connected components over a candidate-pair edge list → (id, comp)
-    where ``comp`` is the minimum vertex id of the component. Pure DataFrame
-    joins, no driver-side graph state.
+    where ``comp`` is the minimum vertex id of the component.
 
     The algorithm is min-label propagation + pointer jumping; it measured
     faster than alternating large-star/small-star (Kiveris et al., SoCC
@@ -329,93 +334,123 @@ def connected_components(
     Each iteration does (a) a min-label propagation step (every vertex takes
     the min of its own and its neighbors' labels) and (b) a pointer-jumping
     step (``comp ← comp[comp]``), so convergence is O(log diameter), not
-    O(diameter) — a 10k-document chain resolves in ~14 iterations. Labels are
-    ``localCheckpoint``-ed each iteration to truncate the exponentially
-    growing self-join lineage (at cluster scale with lost-executor risk,
-    point ``spark.sparkContext.setCheckpointDir`` at durable storage and swap
-    in ``checkpoint()``); convergence is detected by the exact decimal sum of
-    labels, which strictly decreases until fixpoint — one vertex-sized
-    aggregate per iteration, no extra join.
+    O(diameter) — a 10k-document chain resolves in ~14 iterations. The
+    labels only decrease, so an iteration that changes none is the
+    fixpoint; not reaching it within ``max_iter`` raises ``RuntimeError``.
+
+    Where the edge list fits one partition of the loop (< 250,000 edges, at
+    most ~4 MB of ids) the same iterations run on the driver over numpy
+    arrays and the labels come back as a local relation: a delta-sized
+    graph otherwise pays a few Spark jobs of planning and scheduling per
+    iteration for milliseconds of work. Larger graphs run the distributed
+    loop (:func:`_components_loop`). Neither path changes session conf. A
+    null vertex id raises ``ValueError`` on both.
 
     Beyond-reference operator (the reference has no graph ops): this is the
     cluster-resolution step that keeps near-dup output linear in cluster
     count where pair output is O(c²) per cluster."""
-    # one cheap count sizes the iteration partitioning: a 255-edge candidate
-    # graph must not pay 32-partition shuffle scheduling per iteration, and a
-    # 10^10-edge graph must not funnel into one task. Upstream pair sources
-    # (lsh/simhash/ngram) return persisted DataFrames, so the count is free.
-    n_edges = pairs.count()
-    spark = pairs.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    parts = max(1, min(4 * par, n_edges // 250_000 + 1))
-    # tiny-graph fast path: with a single edge partition AQE has nothing to
-    # adapt (no skew to split, nothing to coalesce) but still inserts a
-    # materialization boundary at every exchange of every iteration —
-    # measured ~1.5× the per-iteration wall on bench-scale graphs. At
-    # parts > 1 AQE stays on (skew-split of the neighbor join is the scale
-    # safety valve). Restored in the finally even on non-convergence.
-    aqe_off = parts == 1
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    if aqe_off:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        # ... and with AQE off, the loop's joins/aggregates would otherwise
-        # shuffle into spark.sql.shuffle.partitions tiny tasks per stage;
-        # pin them to the edge partition count for the loop's duration
-        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    # one aggregate picks the path, sizes the loop's partitioning (a
+    # 10^10-edge graph must not funnel into one task) and finds null ids.
+    # Upstream pair sources (lsh/simhash/ngram) return persisted
+    # DataFrames, so it is cheap and the chosen path reads the cache.
+    n_edges, n_src, n_dst = pairs.agg(F.count(F.lit(1)), F.count(src), F.count(dst)).first()
+    if n_src < n_edges or n_dst < n_edges:
+        raise ValueError("connected_components: the edge list has a null vertex id")
+    if n_edges < _EDGES_PER_PARTITION:
+        return _components_on_driver(pairs, src, dst, max_iter)
+    par = pairs.sparkSession.sparkContext.defaultParallelism
+    parts = min(4 * par, n_edges // _EDGES_PER_PARTITION + 1)
+    return _components_loop(pairs, src, dst, max_iter, parts)
+
+
+def _symmetric_edges(pairs: DataFrame, src: str, dst: str) -> DataFrame:
+    """(u, v) edge list with both directions of every pair."""
+    sym = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    return sym.unionByName(sym.select(F.col("v").alias("u"), F.col("u").alias("v")))
+
+
+def _unconverged(max_iter: int) -> RuntimeError:
+    # silently-unconverged labels would merge downstream clusters on wrong
+    # components with no signal (ADVICE r5) — fail loudly; with pointer
+    # jumping, max_iter=30 covers diameter ~2^30, so hitting this means a
+    # pathological input, not a tuning matter
+    return RuntimeError(
+        f"connected_components did not converge in max_iter={max_iter} "
+        "iterations; raise max_iter (pointer jumping converges in "
+        "O(log diameter) rounds)"
+    )
+
+
+def _components_on_driver(pairs: DataFrame, src: str, dst: str, max_iter: int) -> DataFrame:
+    """:func:`connected_components` for a null-free edge list that fits one
+    loop partition: the loop's iterations, one for one, over numpy arrays."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.types import StructField, StructType
+
+    t = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")).toArrow()
+    id_type = _symmetric_edges(pairs, src, dst).schema["u"].dataType
+    u = t.column("u").to_numpy()
+    # vertex index = rank of its id, so the min index IS the min id
+    ids, idx = np.unique(np.concatenate([u, t.column("v").to_numpy()]), return_inverse=True)
+    a, b = idx[: len(u)], idx[len(u):]
+    labels = np.arange(len(ids))
+    prev = None
+    for _ in range(max_iter):
+        merged = labels.copy()
+        np.minimum.at(merged, a, labels[b])
+        np.minimum.at(merged, b, labels[a])
+        labels = merged[merged]
+        if prev is not None and np.array_equal(labels, prev):
+            break
+        prev = labels
+    else:
+        raise _unconverged(max_iter)
+    schema = StructType([StructField("id", id_type), StructField("comp", id_type)])
+    return pairs.sparkSession.createDataFrame(pa.table({"id": ids, "comp": ids[labels]}), schema)
+
+
+def _components_loop(pairs: DataFrame, src: str, dst: str, max_iter: int, parts: int) -> DataFrame:
+    """:func:`connected_components` as pure DataFrame joins over ``parts``
+    edge partitions, with no driver-side graph state. Labels are
+    ``localCheckpoint``-ed each iteration to truncate the exponentially
+    growing self-join lineage (at cluster scale with lost-executor risk,
+    point ``spark.sparkContext.setCheckpointDir`` at durable storage and
+    swap in ``checkpoint()``); convergence is detected by the exact decimal
+    sum of labels, which strictly decreases until fixpoint — one
+    vertex-sized aggregate per iteration, no extra join. AQE stays on: its
+    skew split of the neighbor join is the scale safety valve."""
+    edges = _symmetric_edges(pairs, src, dst).repartition(parts, "v").persist()
     try:
-        sym = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        edges = (
-            sym.unionByName(sym.select(F.col("v").alias("u"), F.col("u").alias("v")))
-            .repartition(parts, "v")
-            .persist()
+        labels = (
+            edges.select(F.col("u").alias("id"))
+            .distinct()
+            .select("id", F.col("id").alias("comp"))
+            .localCheckpoint(eager=True)
         )
-        try:
-            labels = (
-                edges.select(F.col("u").alias("id"))
-                .distinct()
-                .select("id", F.col("id").alias("comp"))
-                .localCheckpoint(eager=True)
+        prev = object()
+        for _ in range(max_iter):
+            nbr = edges.join(labels, edges["v"] == labels["id"]).select(
+                F.col("u").alias("id"), "comp"
             )
-            prev = object()
-            converged = False
-            for _ in range(max_iter):
-                nbr = edges.join(labels, edges["v"] == labels["id"]).select(
-                    F.col("u").alias("id"), "comp"
-                )
-                merged = nbr.unionByName(labels).groupBy("id").agg(F.min("comp").alias("comp"))
-                parent = merged.select(F.col("id").alias("p_id"), F.col("comp").alias("p_comp"))
-                jumped = merged.join(parent, merged["comp"] == parent["p_id"], "left").select(
-                    "id", F.coalesce("p_comp", "comp").alias("comp")
-                )
-                # LAZY checkpoint: the convergence aggregate below is the action
-                # that materializes it, so each iteration costs ONE Spark job
-                # (checkpoint + sum together), not two
-                labels = jumped.localCheckpoint(eager=False)
-                s = labels.agg(F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")).first()["s"]
-                if s == prev:
-                    converged = True
-                    break
-                prev = s
-        finally:
-            # released even when an iteration fails: the edge list is
-            # input-sized and must not stay pinned
-            edges.unpersist()
+            merged = nbr.unionByName(labels).groupBy("id").agg(F.min("comp").alias("comp"))
+            parent = merged.select(F.col("id").alias("p_id"), F.col("comp").alias("p_comp"))
+            jumped = merged.join(parent, merged["comp"] == parent["p_id"], "left").select(
+                "id", F.coalesce("p_comp", "comp").alias("comp")
+            )
+            # LAZY checkpoint: the convergence aggregate below is the action
+            # that materializes it, so each iteration costs ONE Spark job
+            # (checkpoint + sum together), not two
+            labels = jumped.localCheckpoint(eager=False)
+            s = labels.agg(F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")).first()["s"]
+            if s == prev:
+                return labels
+            prev = s
     finally:
-        if aqe_off:
-            spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-    if not converged:
-        # silently-unconverged labels would merge downstream clusters on
-        # wrong components with no signal (ADVICE r5) — fail loudly; with
-        # pointer jumping, max_iter=30 covers diameter ~2^30, so hitting
-        # this means a pathological input, not a tuning matter
-        raise RuntimeError(
-            f"connected_components did not converge in max_iter={max_iter} "
-            "iterations; raise max_iter (pointer jumping converges in "
-            "O(log diameter) rounds)"
-        )
-    return labels
+        # released even when an iteration fails: the edge list is
+        # input-sized and must not stay pinned
+        edges.unpersist()
+    raise _unconverged(max_iter)
 
 
 def cluster_assign(

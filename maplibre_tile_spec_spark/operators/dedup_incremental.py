@@ -26,7 +26,9 @@ Per batch, :func:`lsh_dedup_incremental`:
    of the merged component, because each old label is already its
    cluster's min),
 4. runs connected components over the contracted edge list (delta-sized
-   plus touched clusters — never corpus-sized), and
+   plus touched clusters — never corpus-sized; below 250k edges it
+   resolves on the driver and the labels come back as a local relation),
+   and
 5. emits the new docs' assignments, a ``remap`` of old cluster labels that
    merged, and the delta band rows to append to the store.
 
@@ -208,38 +210,52 @@ def lsh_dedup_incremental(
     )
     # contract old docs to their standing cluster labels (= component min id)
     cm = cluster_map.select(F.col("id").alias("m_id"), F.col("cluster_id").alias("old_cluster"))
-    no_edges = probe.join(cm, probe["old_id"] == cm["m_id"]).select(
-        F.col("new_id").alias("doc_a"), F.col("old_cluster").alias("doc_b")
+    # persisted: the edge union below and ``touched`` both read it, and
+    # without the boundary each re-runs the probe join — a second scan of
+    # the whole band store. Delta-sized (edges of the batch's docs only).
+    no_edges = (
+        probe.join(cm, probe["old_id"] == cm["m_id"])
+        .select(F.col("new_id").alias("doc_a"), F.col("old_cluster").alias("doc_b"))
+        .persist()
     )
     nn_edges = dedup.pairs_from_bands(new_bands)
-    # persist: connected_components sizes its partitioning with a count()
-    # and re-reads the edges every iteration
+    # persist: connected_components reads the edges twice (the sizing
+    # aggregate, then the driver collect or the loop's edge build)
     edges = no_edges.unionByName(nn_edges).persist()
-    comp = dedup.connected_components(edges, max_iter=max_iter)
-    touched = no_edges.select(F.col("doc_b").alias("oc")).distinct()
-    # standing labels whose component min changed — new smaller-id member
-    # or a bridge to a smaller-labeled cluster
-    remap = (
-        comp.join(touched, comp["id"] == touched["oc"])
-        .filter(F.col("comp") != F.col("id"))
-        .select(F.col("id").alias("old_cluster_id"), F.col("comp").alias("new_cluster_id"))
-    )
-    new_ids = new_docs.select(F.col(id_col).cast("long").alias("id"))
-    # old-cluster comp rows never match new ids (doc ids are unique across
-    # the old/new split), so a plain left join + coalesce covers both
-    # paired and singleton new docs
-    new_assign = (
-        new_ids.join(comp.withColumnRenamed("id", "_c_id"), new_ids["id"] == F.col("_c_id"), "left")
-        .select("id", F.coalesce("comp", "id").alias("cluster_id"))
-    )
-    # materialize through the persisted edges, then release them; comp is
-    # localCheckpoint-ed inside connected_components so nothing re-reads
-    # edges afterwards
-    new_assign = new_assign.persist()
-    remap = remap.persist()
-    new_assign.count()
-    remap.count()
-    edges.unpersist()
+    try:
+        comp = dedup.connected_components(edges, max_iter=max_iter)
+        touched = no_edges.select(F.col("doc_b").alias("oc")).distinct()
+        # standing labels whose component min changed — new smaller-id
+        # member or a bridge to a smaller-labeled cluster
+        remap = (
+            comp.join(touched, comp["id"] == touched["oc"])
+            .filter(F.col("comp") != F.col("id"))
+            .select(F.col("id").alias("old_cluster_id"), F.col("comp").alias("new_cluster_id"))
+        )
+        new_ids = new_docs.select(F.col(id_col).cast("long").alias("id"))
+        # old-cluster comp rows never match new ids (doc ids are unique
+        # across the old/new split), so a plain left join + coalesce covers
+        # both paired and singleton new docs
+        new_assign = (
+            new_ids.join(comp.withColumnRenamed("id", "_c_id"), new_ids["id"] == F.col("_c_id"), "left")
+            .select("id", F.coalesce("comp", "id").alias("cluster_id"))
+        )
+        # materialize, then release the edges; comp is a local relation or
+        # localCheckpoint-ed (connected_components), so only ``touched``
+        # reads no_edges and nothing re-reads edges afterwards
+        new_assign = new_assign.persist()
+        remap = remap.persist()
+        new_assign.count()
+        remap.count()
+    except BaseException:
+        # the caller never receives new_bands, so it must not stay pinned
+        new_bands.unpersist()
+        raise
+    finally:
+        # delta-sized, but released on a failed batch too (e.g. the
+        # non-convergence RuntimeError), not only on the normal exit
+        edges.unpersist()
+        no_edges.unpersist()
     return IncrementalDedup(new_assign=new_assign, remap=remap, new_bands=new_bands)
 
 

@@ -656,8 +656,8 @@ def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = assign.groupBy("cluster_id").agg(
         F.count("*").alias("n_members"), F.max("doc_id").alias("member_max")
     )
-    # component labels are checkpointed inside cluster_assign, so the
-    # pair graph is no longer referenced
+    # component labels are a local relation or localCheckpoint-ed inside
+    # cluster_assign, so the pair graph is no longer referenced
     pairs.unpersist()
     return out
 
@@ -1299,24 +1299,25 @@ def q_mlt_tile_encode_clipped(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs explode to every bbox tile and each tile keeps the members inside
     its buffered window — near-edge members land in (and are encoded into)
     multiple tiles, exactly as the SQL twin recomputes."""
+    from maplibre_tile_spec_spark.operators import dedup
     from maplibre_tile_spec_spark.operators import features as FE
     from maplibre_tile_spec_spark.operators import tiler
 
     docs = _geo_docs_from_events(spark, sf_dir, multi=True)
     # persisted: the auto-salt pre-aggregate and the main encode branch both
     # read the parsed features — without the cache boundary the Arrow parse
-    # runs once per branch (~0.9 s at sf0.1). Populated lazily during the
-    # caller's single action; the bench clears the cache between cells and
-    # the oracle session ends after the query, so nothing input-sized stays
-    # pinned across measurements.
+    # runs once per branch (~0.9 s at sf0.1). The tile summary is
+    # materialized once through it and the input-sized features released;
+    # only the output-sized summary stays pinned.
     feats = FE.extract_features(docs).persist()
-    return tiler.encode_tiles_clipped(feats, zoom=7, buffer=64).select(
+    out = tiler.encode_tiles_clipped(feats, zoom=7, buffer=64).select(
         F.col("z").cast("long"),
         F.col("x").cast("long"),
         F.col("y").cast("long"),
         F.col("n_features"),
         F.col("n_vertices"),
     )
+    return dedup._scoped_materialize(out, feats)
 
 
 def _sql_mlt_tile_encode_clipped(zoom: int = 7, extent: int = 4096, buffer: int = 64) -> str:

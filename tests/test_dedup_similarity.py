@@ -121,27 +121,43 @@ def _union_find(edges, vertices):
     return {v: find(v) for v in vertices}
 
 
-class TestClusterResolution:
-    """VERDICT r4 #1: keep-one dedup output via connected components."""
+def _loop_instead(pairs, src, dst, max_iter):
+    return dedup._components_loop(pairs, src, dst, max_iter, 1)
 
-    def test_components_match_union_find(self, spark, docs):
+
+def _each_path(monkeypatch):
+    """Yield "driver", then "loop" with connected_components' driver path
+    replaced by the loop, which runs at 250k edges and above. Every test
+    graph is smaller, so without the reroute the loop would go untested."""
+    yield "driver"
+    monkeypatch.setattr(dedup, "_components_on_driver", _loop_instead)
+    yield "loop"
+
+
+class TestClusterResolution:
+    """VERDICT r4 #1: keep-one dedup output via connected components. The
+    union-find parity tests check both paths of connected_components."""
+
+    def test_components_match_union_find(self, spark, docs, monkeypatch):
         pairs = dedup.lsh_candidate_pairs(docs)
         edge_rows = [(r.doc_a, r.doc_b) for r in pairs.collect()]
         verts = {v for e in edge_rows for v in e}
         expect = _union_find(edge_rows, verts)
-        got = {r.id: r.comp for r in dedup.connected_components(pairs).collect()}
-        assert got == expect
+        for path in _each_path(monkeypatch):
+            got = {r.id: r.comp for r in dedup.connected_components(pairs).collect()}
+            assert got == expect, path
         pairs.unpersist()
 
-    def test_chain_converges_via_pointer_jumping(self, spark):
+    def test_chain_converges_via_pointer_jumping(self, spark, monkeypatch):
         # a 400-vertex path has diameter 400: plain min-propagation needs
         # ~400 rounds; pointer jumping resolves it within max_iter=30
         edges = [(i, i + 1) for i in range(400)]
         pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-        got = {r.id: r.comp for r in dedup.connected_components(pairs, max_iter=30).collect()}
-        assert got == {i: 0 for i in range(401)}
+        for path in _each_path(monkeypatch):
+            got = {r.id: r.comp for r in dedup.connected_components(pairs, max_iter=30).collect()}
+            assert got == {i: 0 for i in range(401)}, path
 
-    def test_chain_random_and_self_loop_match_union_find(self, spark):
+    def test_chain_random_and_self_loop_match_union_find(self, spark, monkeypatch):
         import random
 
         rng = random.Random(42)
@@ -151,8 +167,81 @@ class TestClusterResolution:
         edges = chain + rand + [(1000, 1000)]
         pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
         expect = _union_find(edges, {v for e in edges for v in e})
+        for path in _each_path(monkeypatch):
+            got = {r.id: r.comp for r in dedup.connected_components(pairs).collect()}
+            assert got == expect, path
+
+    def test_max_iter_same_on_both_paths(self, spark):
+        """Both paths run the same iterations: the fewest rounds that
+        resolve the 400-chain on the driver also resolve it in the loop,
+        and one round fewer fails on both with the same RuntimeError."""
+        pairs = spark.createDataFrame([(i, i + 1) for i in range(400)], "doc_a long, doc_b long")
+        for need in range(1, 31):
+            try:
+                dedup.connected_components(pairs, max_iter=need)
+                break
+            except RuntimeError:
+                pass
+        assert need > 2
+        got = {r.id: r.comp for r in _loop_instead(pairs, "doc_a", "doc_b", need).collect()}
+        assert got == {i: 0 for i in range(401)}
+        msg = f"did not converge in max_iter={need - 1} "
+        with pytest.raises(RuntimeError, match=msg):
+            dedup.connected_components(pairs, max_iter=need - 1)
+        with pytest.raises(RuntimeError, match=msg):
+            _loop_instead(pairs, "doc_a", "doc_b", need - 1)
+
+    def test_edge_list_of_a_partition_or_more_takes_the_loop(self, spark, monkeypatch):
+        """An edge list of at least one loop partition is not collected: it
+        runs the loop over count // partition size + 1 partitions (shown
+        here with the partition size cut to 10 edges)."""
+        calls = []
+        loop = dedup._components_loop
+
+        def spy(pairs, src, dst, max_iter, parts):
+            calls.append(parts)
+            return loop(pairs, src, dst, max_iter, parts)
+
+        monkeypatch.setattr(dedup, "_EDGES_PER_PARTITION", 10)
+        monkeypatch.setattr(dedup, "_components_loop", spy)
+        pairs = spark.createDataFrame([(i, i + 1) for i in range(50)], "doc_a long, doc_b long")
         got = {r.id: r.comp for r in dedup.connected_components(pairs).collect()}
-        assert got == expect
+        assert got == {i: 0 for i in range(51)}
+        assert calls == [6]
+        small = spark.createDataFrame([(i, i + 1) for i in range(9)], "doc_a long, doc_b long")
+        assert {r.comp for r in dedup.connected_components(small).collect()} == {0}
+        assert calls == [6]
+
+    def test_no_session_conf_change(self, spark, monkeypatch):
+        """Concurrent jobs share the session, so neither path may set a
+        session conf (the loop used to switch AQE off session-wide)."""
+        from pyspark.sql.conf import RuntimeConfig
+
+        def refuse(self, key, value):
+            raise AssertionError(f"connected_components set {key}={value}")
+
+        pairs = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "doc_a long, doc_b long")
+        monkeypatch.setattr(RuntimeConfig, "set", refuse)
+        for path in _each_path(monkeypatch):
+            got = {r.id: r.comp for r in dedup.connected_components(pairs).collect()}
+            assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}, path
+
+    def test_null_vertex_id_raises(self, spark, monkeypatch):
+        """A null id fails whatever the graph's size: with the partition
+        size cut to 1 edge, the same 2-edge lists would take the loop."""
+        for nulls in ([(1, 2), (3, None)], [(None, 2), (3, 4)]):
+            pairs = spark.createDataFrame(nulls, "doc_a long, doc_b long")
+            for size in (dedup._EDGES_PER_PARTITION, 1):
+                monkeypatch.setattr(dedup, "_EDGES_PER_PARTITION", size)
+                with pytest.raises(ValueError, match="null vertex id"):
+                    dedup.connected_components(pairs)
+
+    def test_driver_path_keeps_id_type(self, spark):
+        pairs = spark.createDataFrame([(1, 2), (3, 2)], "doc_a int, doc_b int")
+        comp = dedup.connected_components(pairs)
+        assert comp.schema == dedup._components_loop(pairs, "doc_a", "doc_b", 30, 1).schema
+        assert comp.schema["id"].dataType.simpleString() == "int"
+        assert {r.id: r.comp for r in comp.collect()} == {1: 1, 2: 1, 3: 1}
 
     @staticmethod
     def _pinned_rdds(sc):
@@ -165,8 +254,8 @@ class TestClusterResolution:
         return n
 
     def test_failed_iteration_releases_edge_persist(self, spark, monkeypatch):
-        """The input-sized edge persist is released even when an iteration
-        fails, not only on the normal exit."""
+        """The distributed loop releases its input-sized edge persist even
+        when an iteration fails, not only on the normal exit."""
         sc = spark.sparkContext._jsc.sc()
         pairs = spark.createDataFrame([(i, i + 1) for i in range(50)], "doc_a long, doc_b long")
         baseline = self._pinned_rdds(sc)
@@ -183,20 +272,21 @@ class TestClusterResolution:
         # the convergence aggregate's .first() is the loop's one action
         monkeypatch.setattr(df_cls, "first", first_failing_on_second_call)
         with pytest.raises(RuntimeError, match="injected failure"):
-            dedup.connected_components(pairs)
+            _loop_instead(pairs, "doc_a", "doc_b", 30)
         monkeypatch.undo()
         assert len(calls) == 2
         assert self._pinned_rdds(sc) <= baseline
 
-    def test_multiple_components_and_assign(self, spark):
+    def test_multiple_components_and_assign(self, spark, monkeypatch):
         edges = [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 20)]
         pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
         docs = spark.createDataFrame(
             [(i, f"t{i}") for i in [1, 2, 3, 10, 11, 20, 21, 22, 99]],
             "doc_id long, text string",
         )
-        assign = {r.doc_id: r.cluster_id for r in dedup.cluster_assign(docs, pairs).collect()}
-        assert assign == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20, 99: 99}
+        for path in _each_path(monkeypatch):
+            assign = {r.doc_id: r.cluster_id for r in dedup.cluster_assign(docs, pairs).collect()}
+            assert assign == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20, 99: 99}, path
 
     def test_keep_canonical_linear_in_clusters(self, spark):
         """Skewed-cluster shape: one 2000-doc boilerplate cluster emits ONE
@@ -218,13 +308,14 @@ class TestClusterResolution:
         assert big.n_members == n and big.doc_id == 0
         out.unpersist()
 
-    def test_empty_pairs_all_singletons(self, spark):
+    def test_empty_pairs_all_singletons(self, spark, monkeypatch):
         docs = spark.createDataFrame([(1, "a"), (2, "b")], "doc_id long, text string")
         pairs = spark.createDataFrame([], "doc_a long, doc_b long")
-        out = dedup.dedup_keep_canonical(docs, pairs)
-        got = {(r.doc_id, r.cluster_id, r.n_members) for r in out.collect()}
-        assert got == {(1, 1, 1), (2, 2, 1)}
-        out.unpersist()
+        for path in _each_path(monkeypatch):
+            out = dedup.dedup_keep_canonical(docs, pairs)
+            got = {(r.doc_id, r.cluster_id, r.n_members) for r in out.collect()}
+            assert got == {(1, 1, 1), (2, 2, 1)}, path
+            out.unpersist()
 
 
 class TestSimhash:
@@ -318,6 +409,25 @@ class TestStorageRelease:
         for o in outs:
             o.unpersist()
         assert sc.getPersistentRDDs().size() <= baseline
+
+
+def _store_scan_paths(plan, table_name, via=()):
+    """Every scan of ``table_name`` reachable from a physical plan, as the
+    tuple of cached relations (their RDD ids) passed through on the way."""
+    cls = plan.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        return _store_scan_paths(plan.executedPlan(), table_name, via)
+    if cls.endswith("QueryStageExec"):
+        return _store_scan_paths(plan.plan(), table_name, via)
+    if cls == "ReusedExchangeExec":
+        return _store_scan_paths(plan.child(), table_name, via)
+    if cls == "InMemoryTableScanExec":
+        b = plan.relation().cacheBuilder()
+        return _store_scan_paths(b.cachedPlan(), table_name, via + (b.cachedColumnBuffers().id(),))
+    if cls == "FileSourceScanExec":
+        return [via] if table_name in plan.nodeName() else []
+    kids = plan.children()
+    return [p for i in range(kids.size()) for p in _store_scan_paths(kids.apply(i), table_name, via)]
 
 
 class TestIncrementalDedup:
@@ -426,6 +536,47 @@ class TestIncrementalDedup:
             assert "Bucketed: true" in plan, plan
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
+
+    def test_batch_reads_band_store_once(self, spark, split):
+        """The batch reads the band store once: the results' plans reach the
+        store only through one persisted relation (the probe's edges), never
+        by a scan of their own — at lakehouse scale the store read is the
+        corpus-sized cost of a batch."""
+        from maplibre_tile_spec_spark.operators import dedup_incremental as DI
+
+        _, old, new = split
+        table = DI.ensure_store_table(spark, "pytest_inc_once")
+        cmap = self._standing_state(spark, old, table)
+        res = DI.lsh_dedup_incremental(new, spark.table(table), cmap)
+        name = table.split(".")[1]
+        paths = [
+            path
+            for df in (res.remap, res.new_assign)
+            for path in _store_scan_paths(
+                df._jdf.queryExecution().optimizedPlan().cacheBuilder().cachedPlan(), name
+            )
+        ]
+        for df in (res.new_assign, res.remap, res.new_bands, cmap):
+            df.unpersist()
+        assert paths, "the batch never reads the band store"
+        assert all(len(p) == 1 for p in paths), paths
+        assert len(set(paths)) == 1, paths
+
+    def test_failed_batch_releases_persists(self, spark, split):
+        """A batch whose connected components fail (here: max_iter=1 cannot
+        reach the fixpoint) leaves nothing it persisted pinned."""
+        from maplibre_tile_spec_spark.operators import dedup_incremental as DI
+
+        _, old, new = split
+        table = DI.ensure_store_table(spark, "pytest_inc_fail")
+        cmap = self._standing_state(spark, old, table)
+        sc = spark.sparkContext._jsc.sc()
+        baseline = TestClusterResolution._pinned_rdds(sc)
+        with pytest.raises(RuntimeError, match="did not converge in max_iter=1 "):
+            DI.lsh_dedup_incremental(new, spark.table(table), cmap, max_iter=1)
+        pinned = TestClusterResolution._pinned_rdds(sc)
+        cmap.unpersist()
+        assert pinned <= baseline
 
     def test_incremental_never_scans_old_documents(self, spark, split, tmp_path):
         """Production shape: standing state on disk (band store + cluster

@@ -183,6 +183,20 @@ class TestClippedTiler:
         assert max(areas) / min(areas) < 1.02
 
 
+    def test_clipped_query_releases_parsed_features(self, spark, sf_dir):
+        """q_mlt_tile_encode_clipped materializes its tile summary and
+        releases the input-sized parsed features: only the summary stays
+        pinned, and unpersisting it returns storage to the baseline."""
+        from maplibre_tile_spec_spark import queries as Q
+
+        sc = spark.sparkContext._jsc.sc()
+        baseline = sc.getPersistentRDDs().size()
+        out = Q.q_mlt_tile_encode_clipped(spark, sf_dir)
+        assert out.count() > 0
+        assert sc.getPersistentRDDs().size() <= baseline + 1
+        out.unpersist()
+        assert sc.getPersistentRDDs().size() <= baseline
+
 class TestSkewBalance:
     def test_salting_splits_hot_tile_work(self, spark, feats):
         """A pathological hot tile (every feature in one tile at z0) must
